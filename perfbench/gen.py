@@ -1,10 +1,15 @@
 """Seeded input generation.
 
-Writes TPC-H-shaped parquet tables (the columns and value ranges of the
-engine's test fixtures: `lineitem`, `supplier`, `orders`) into a
-directory the benchmark owns. The same (seed, scale) always produces the
-same bytes; different seeds produce same-sized tables with independent
-values, so timings are comparable across seeds.
+Writes TPC-H-shaped parquet tables (`lineitem`, `supplier`, `orders`)
+into a directory the benchmark owns. The same (seed, scale) always
+produces the same bytes; different seeds produce same-sized tables with
+independent values, so timings are comparable across seeds.
+
+The tables follow the engine's test fixtures, not TPC-H dbgen: in the
+fixtures every column is drawn on its own, uniformly, over the ranges
+below. `l_suppkey` does not depend on `l_partkey`, the return flag and
+line status do not depend on the dates, and all six
+(l_returnflag, l_linestatus) pairs occur about equally often.
 """
 
 from __future__ import annotations
@@ -19,8 +24,9 @@ _DAY_MS = 86_400_000
 _EPOCH_1995 = 788_918_400_000  # 1995-01-01T00:00:00Z in ms
 
 
-def _dates(rng: np.random.Generator, n: int) -> pa.Array:
-    ms = _EPOCH_1995 + rng.integers(0, 2500, n) * _DAY_MS
+def _dates(rng: np.random.Generator, n: int, first: int, last: int) -> pa.Array:
+    """Midnights of days `first`..`last` after 1995-01-01, uniformly."""
+    ms = _EPOCH_1995 + rng.integers(first, last + 1, n) * _DAY_MS
     return pa.array(ms, type=pa.timestamp("ms"))
 
 
@@ -66,7 +72,7 @@ def generate(out_dir: str, seed: int, sf: float,
             "l_tax": rng.integers(0, 9, n) / 100.0,
             "l_returnflag": _pick(rng, ["A", "N", "R"], n),
             "l_linestatus": _pick(rng, ["F", "O"], n),
-            "l_shipdate": _dates(rng, n),
+            "l_shipdate": _dates(rng, n, 1, 2499),
         }), os.path.join(out_dir, "lineitem.parquet"))
         rows["lineitem"] = n
     if "supplier" in tables:
@@ -88,7 +94,7 @@ def generate(out_dir: str, seed: int, sf: float,
             "o_custkey": rng.integers(0, n_cust, n),
             "o_orderstatus": _pick(rng, ["F", "O", "P"], n),
             "o_totalprice": np.round(rng.uniform(800.0, 500_000.0, n), 2),
-            "o_orderdate": _dates(rng, n),
+            "o_orderdate": _dates(rng, n, 0, 2404),
             "o_orderpriority": _pick(rng, ["1-URGENT", "2-HIGH", "3-MEDIUM",
                                            "4-NOT SPECIFIED", "5-LOW"], n),
         }), os.path.join(out_dir, "orders.parquet"))

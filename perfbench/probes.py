@@ -22,6 +22,8 @@ import urllib.request
 
 _HZ = os.sysconf("SC_CLK_TCK")
 _PAGE = os.sysconf("SC_PAGE_SIZE")
+SAMPLE_INTERVAL_S = 0.25  # ProcTree's peak-RSS sampling period
+SETTLE_TIMEOUT_S = 10.0  # how long StatusStore waits for a job group to end
 
 
 def process_start_monotonic() -> float:
@@ -63,9 +65,8 @@ def read_stat(pid: int) -> dict | None:
 class ProcTree:
     """The processes this benchmark started: JVM, daemon and workers."""
 
-    def __init__(self, root: int | None = None, interval: float = 0.25):
-        self.root = root or os.getpid()
-        self.interval = interval
+    def __init__(self):
+        self.root = os.getpid()
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
@@ -130,7 +131,7 @@ class ProcTree:
             self.workers_seen |= s["py_pids"]
 
     def _loop(self) -> None:
-        while not self._stop.wait(self.interval):
+        while not self._stop.wait(SAMPLE_INTERVAL_S):
             self._sample_once()
 
     def start(self) -> None:
@@ -186,13 +187,13 @@ class StatusStore:
     def _jobs(self, groups: set[str]) -> list[dict]:
         return [j for j in self._get("/jobs") if j.get("jobGroup") in groups]
 
-    def group_metrics(self, groups: set[str], timeout: float = 10.0) -> dict:
+    def group_metrics(self, groups: set[str]) -> dict:
         """Sum the execution metrics of every job in `groups`.
 
         The status store is fed asynchronously by the listener bus, so wait
         until every job, stage and SQL execution of the groups has ended.
         """
-        deadline = time.monotonic() + timeout
+        deadline = time.monotonic() + SETTLE_TIMEOUT_S
         while True:
             jobs = self._jobs(groups)
             job_ids = {j["jobId"] for j in jobs}

@@ -25,10 +25,16 @@ Spark-first note: chained Python UDFs in one projection are collapsed by
 Catalyst into a single ArrowEvalPython node, so the WKB bytes between
 stages never hit an exchange — the rewrite changes serialization format
 and kernel, not the shuffle structure (plan-audited).
+
+`select_st` then fuses the projection (_Fusion): all registered scalar
+ST_ calls of its output expressions run once each inside one
+struct-returning pandas UDF, so a geometry read by several columns is
+derived once and the projection costs one ArrowEvalPython node.
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -103,11 +109,12 @@ class _Expr:
 
 def _parse(s: str, i: int = 0, stop_at_paren: bool = False):
     """Parse s[i:] into an _Expr, stopping (exclusive) at an unbalanced
-    ')' or at a top-level ',' when stop_at_paren. Returns (expr_items,
-    next_index, stopped_char)."""
+    ')' or at a ',' outside any bare parenthesised group when
+    stop_at_paren. Returns (expr_items, next_index, stopped_char)."""
     items: list = []
     buf: list = []
     n = len(s)
+    depth = 0                     # open bare '(' groups inside this expr
     while i < n:
         c = s[i]
         if c == "'":                                # SQL string literal
@@ -128,8 +135,12 @@ def _parse(s: str, i: int = 0, stop_at_paren: bool = False):
             buf.append(s[i:j + 1])
             i = j + 1
             continue
-        if stop_at_paren and c in "),":
+        if stop_at_paren and depth == 0 and c in "),":
             break
+        if c == "(":
+            depth += 1
+        elif c == ")" and depth:
+            depth -= 1
         m = _IDENT.match(s, i)
         if m:
             name = m.group(0)
@@ -181,23 +192,28 @@ def _producer(call: _Call):
 
 
 def _chain_stats(call: _Call):
-    """(size, compute) over the maximal B-chain rooted here: size counts
-    twin-covered calls (this call + recursively, geometry args that are
-    sole producer calls); compute is True if any of them is a genuine
-    compute op (not text-identity hygiene)."""
+    """(size, compute, st_edge) over the maximal B-chain rooted here:
+    size counts twin-covered calls (this call + recursively, geometry
+    args that are sole producer calls); compute is True if any of them
+    is a genuine compute op (not text-identity hygiene); st_edge is True
+    if a geometry arg at the chain's text edge is itself an ST_ call."""
     spec = _SPEC.get(call.name.lower())
     if spec is None:
-        return 0, False
+        return 0, False, False
     total = 1
     compute = call.name.lower() not in _HYGIENE
+    st_edge = False
     for pos in spec[1]:
         if pos < len(call.args):
             inner = call.args[pos].sole_call()
             if inner is not None and _producer(inner):
-                sz, cp = _chain_stats(inner)
+                sz, cp, se = _chain_stats(inner)
                 total += sz
                 compute = compute or cp
-    return total, compute
+                st_edge = st_edge or se
+            elif inner is not None and inner.name.lower().startswith("st_"):
+                st_edge = True
+    return total, compute, st_edge
 
 
 def _emit_b(call: _Call) -> str:
@@ -239,8 +255,14 @@ def _emit_call(call: _Call) -> str:
             inner = ",".join(_emit_expr(a) for a in fuse_inner.args)
             return f"{fused}({inner})"
     spec = _SPEC.get(call.name.lower())
-    size, compute = _chain_stats(call) if spec is not None else (0, False)
-    if spec is not None and size >= 2 and compute:
+    size, compute, st_edge = _chain_stats(call)
+    # A chain fed by another ST_ call's WKT stays on text: that text is
+    # emitted in whatever vertex walk the producer chose (ST_Affine's
+    # clockwise rects), which the text lanes take but the carrier's parse
+    # lanes only take in canonical order — ST_X(ST_Centroid(ST_Affine(..)))
+    # measured 0.04 s on text vs 0.38 s on the carrier per 10k rects,
+    # the parse edge falling back to the per-row parser.
+    if spec is not None and size >= 2 and compute and not st_edge:
         core = _emit_b(call)
         if spec[2] == "geom":
             # geometry surfacing to the user: canonical WKT text edge
@@ -264,12 +286,7 @@ def rewrite(expr: str) -> str:
     """Rewrite one SQL expression string: every maximal nested
     registered-ST_ composition (chain of >= 2 twin-covered calls) is
     re-emitted on the WKB carrier; everything else is returned verbatim.
-    SPARK_GRAFT_NO_CHAINRW=1 disables the rewrite (A/B benchmarking and
-    parity probes run the same query text down both paths)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_CHAINRW"):
-        return expr
+    The unrewritten path is plain F.expr / spark.sql on the same text."""
     items, _, _ = _parse(expr)
     return _emit_expr(_Expr(items))
 
@@ -281,10 +298,282 @@ def st_expr(expr: str) -> Column:
 
 
 def select_st(df: DataFrame, *exprs: str) -> DataFrame:
-    """df.selectExpr with the chain rewrite applied to every expression.
+    """df.selectExpr with the chain rewrite applied to every expression,
+    then the projection fused (_Fusion below): every registered ST_ call
+    of the projection runs once, in one struct-returning pandas UDF.
     Registration (text + _B twins) must already have happened
     (functions.spatial.register_spatial_functions)."""
-    return df.select(*[st_expr(e) for e in exprs])
+    texts = [rewrite(e) for e in exprs]
+    fusion = _Fusion(texts)
+    if not fusion.fused:
+        return df.select(*[F.expr(t) for t in texts])
+    out = fusion.texts
+    bare = [i for i, t in enumerate(out)
+            if t != texts[i] and not _has_alias(t)]
+    if bare:
+        # keep the column names of the unfused projection
+        names = df.select(*[F.expr(texts[i]) for i in bare]).columns
+        for i, name in zip(bare, names):
+            out[i] += " AS `" + name.replace("`", "``") + "`"
+    spark = df.sparkSession
+    done = spark.__dict__.setdefault("_spark_graft_fused", set())
+    name = fusion.name
+    if name not in done:
+        spark.udf.register(name, fusion.udf())
+        done.add(name)
+    # the fused call is written once; the outputs read its fields
+    # (one copy of every leaf for the parser and analyzer, not one per
+    # output column)
+    fused = df.withColumn(
+        _FUSED_COL, F.expr(f"{name}({', '.join(fusion.leaves)})"))
+    return fused.select(*[F.expr(t.replace(_SLOT, _FUSED_COL)) for t in out])
+
+
+def _has_alias(expr: str) -> bool:
+    pos = _kw_positions(expr, "as")
+    return bool(pos) and bool(re.fullmatch(
+        r"[A-Za-z_][A-Za-z0-9_]*|`[^`]+`", expr[pos[-1] + 2:].strip()))
+
+
+# ------------------------------------------------ projection fusion
+#
+# EvalPythonExec evaluates each output column's UDF chain on its own, so
+# a derived geometry read by two measures ran its kernels once per
+# measure, and a UDF whose argument is not a lone UDF call cost an extra
+# ArrowEvalPython node and Arrow round trip. _Fusion treats all output
+# expressions of one projection as one DAG: every registered scalar
+# pandas-UDF call is a node keyed by its canonical text, every other
+# argument is an input column, and one struct-returning pandas UDF calls
+# each node's .func once, children first. Each output expression then
+# reads its field. Values stay bit-identical: an argument that Spark
+# would have passed through the JVM (any argument of a multi-argument
+# call, any struct field) makes the same Arrow round trip in-process
+# (_jvm_hop); a lone UDF argument is passed on directly, as Spark's
+# chained UDFs are.
+
+#: placeholder for the fused call in _Fusion.texts
+_SLOT = "\x00"
+#: the column select_st evaluates the fused call into
+_FUSED_COL = "__st_fused"
+
+_CANON = re.compile(r"('(?:[^']|'')*'|`[^`]*`)|\s*([(),])\s*|\s+")
+_FIELDS = re.compile(r"(?:\s*\.\s*[A-Za-z_][A-Za-z0-9_]*)+")
+_FIELD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _canon(text: str) -> str:
+    """Whitespace-insensitive key of an expression (literals kept)."""
+    return _CANON.sub(lambda m: m.group(1) or m.group(2) or " ",
+                      text).strip()
+
+
+def _text(expr: _Expr) -> str:
+    return "".join(x if isinstance(x, str) else
+                   f"{x.name}({','.join(_text(a) for a in x.args)})"
+                   for x in expr.items)
+
+
+def _scalar_udfs() -> dict:
+    """lower SQL name -> registered scalar pandas UDF (the fusable
+    calls; aggregates and other eval types are left to Spark)."""
+    from pyspark.rdd import PythonEvalType
+
+    from .spatial import registered_udfs
+
+    return {k.lower(): u for k, u in registered_udfs().items()
+            if u.evalType == PythonEvalType.SQL_SCALAR_PANDAS_UDF}
+
+
+class _Fusion:
+    """Plan of one projection's fusion. fused is False when there is
+    nothing to fuse (fewer than two registered calls); otherwise texts
+    are the output expressions with _SLOT standing for the fused call,
+    leaves are its argument texts and udf() builds it."""
+
+    def __init__(self, exprs: list):
+        self.table = _scalar_udfs()
+        self.sql_name: dict = {}   # id(udf) -> its first registered name
+        for k, u in self.table.items():
+            self.sql_name.setdefault(id(u), k)
+        self.keys: dict = {}       # canonical text -> node index
+        self.steps: list = []      # ("call", func, args) | ("field", i, name) | ("hop", i, None)
+        self.types: list = []      # Spark type of each node's value
+        self.leaf_index: dict = {}
+        self.leaves: list = []
+        self.roots: dict = {}      # node index -> output field number
+        texts = [self._emit(_Expr(_parse(e)[0])) for e in exprs]
+        calls = sum(1 for op, _, _ in self.steps if op == "call")
+        self.fused = calls >= 2 and bool(self.leaves)
+        self.texts = texts if self.fused else list(exprs)
+        sig = "|".join([*self.leaves, *self.keys,
+                        *(f"{i}:{k}" for i, k in self.roots.items())])
+        self.name = "ST_Fused_" + hashlib.sha1(sig.encode()).hexdigest()[:16]
+
+    # -- planning
+
+    def _typed(self, call: _Call, fields: list):
+        """(udf, [(field, type)], final type) when call is fusable and
+        every field access resolves on its struct type, else None."""
+        from pyspark.sql.types import StructType
+
+        u = self.table.get(call.name.lower())
+        if u is None:
+            return None
+        t, path = u.returnType, []
+        for f in fields:
+            if not isinstance(t, StructType):
+                return None
+            hit = [fld for fld in t.fields if fld.name.lower() == f.lower()]
+            if not hit:
+                return None
+            path.append((hit[0].name, hit[0].dataType))
+            t = hit[0].dataType
+        return u, path, t
+
+    def _node(self, call: _Call, u) -> int:
+        args = []
+        for a in call.args:
+            ref = self._ref(a)
+            if ref is None:
+                text = _text(a).strip()
+                k = _canon(text)
+                if k not in self.leaf_index:
+                    self.leaf_index[k] = len(self.leaves)
+                    self.leaves.append(text)
+                args.append(("leaf", self.leaf_index[k]))
+            else:
+                args.append(("node", ref))
+        if not (len(args) == 1 and args[0][0] == "node"
+                and self.steps[args[0][1]][0] == "call"):
+            # not a chained lone UDF argument: Spark would pass these
+            # node values through the JVM (one hop per node, shared)
+            args = [(kind, j if kind == "leaf" else self._add(
+                f"~{j}", ("hop", j, None), self.types[j]))
+                for kind, j in args]
+        key = (f"{self.sql_name[id(u)]}("
+               + ",".join(f"{kind[0]}{j}" for kind, j in args) + ")")
+        return self._add(key, ("call", u.func, args), u.returnType)
+
+    def _add(self, key: str, step, typ) -> int:
+        if key not in self.keys:
+            self.keys[key] = len(self.steps)
+            self.steps.append(step)
+            self.types.append(typ)
+        return self.keys[key]
+
+    def _value(self, call: _Call, fields: list):
+        """Node index of call(...).f1.f2..., or None if not fusable."""
+        typed = self._typed(call, fields)
+        if typed is None:
+            return None
+        u, path, _ = typed
+        i = self._node(call, u)
+        for name, t in path:
+            i = self._add(f"{i}.{name}", ("field", i, name), t)
+        return i
+
+    def _ref(self, expr: _Expr):
+        """Node index when the argument is exactly one fusable call
+        (optionally followed by struct field access), else None."""
+        items = [x for x in expr.items
+                 if not (isinstance(x, str) and not x.strip())]
+        if not items or not isinstance(items[0], _Call) or len(items) > 2:
+            return None
+        fields = []
+        if len(items) == 2:
+            if not isinstance(items[1], str) \
+                    or not _FIELDS.fullmatch(items[1].rstrip()):
+                return None
+            fields = _FIELD.findall(items[1])
+        return self._value(items[0], fields)
+
+    def _emit(self, expr: _Expr) -> str:
+        """expr's text with every outermost fusable call replaced by a
+        field of the fused struct."""
+        from pyspark.sql.types import StructType
+
+        out = []
+        items = expr.items
+        i = 0
+        while i < len(items):
+            x = items[i]
+            i += 1
+            if isinstance(x, str):
+                out.append(x)
+                continue
+            m = None
+            if i < len(items) and isinstance(items[i], str):
+                m = _FIELDS.match(items[i])
+            fields = _FIELD.findall(m.group(0)) if m else []
+            typed = self._typed(x, fields)
+            if typed is None:
+                # not fusable: keep the call, fuse inside its args
+                out.append(f"{x.name}("
+                           + ",".join(self._emit(a) for a in x.args) + ")")
+                continue
+            if isinstance(typed[2], StructType):
+                # a whole struct value: the fused struct's fields stay
+                # flat, so this call is left to Spark as written
+                out.append(_text(_Expr([x])))
+                continue
+            node = self._value(x, fields)
+            if m:
+                items = items[:i] + [items[i][m.end():]] + items[i + 1:]
+            k = self.roots.setdefault(node, len(self.roots))
+            out.append(f"{_SLOT}.c{k}")
+        return "".join(out)
+
+    # -- execution
+
+    def udf(self):
+        """The fused pandas UDF: leaves in, struct of root values out."""
+        from pyspark.sql.functions import pandas_udf
+        from pyspark.sql.types import StructField, StructType
+
+        steps, types = self.steps, self.types
+        roots = sorted(self.roots.items(), key=lambda kv: kv[1])
+        out_t = StructType([StructField(f"c{k}", types[i])
+                            for i, k in roots])
+
+        def fused(*cols):
+            import pandas as pd
+
+            vals = []
+            for op, a, b in steps:
+                if op == "call":
+                    vals.append(a(*[cols[j] if kind == "leaf" else vals[j]
+                                    for kind, j in b]))
+                elif op == "field":
+                    vals.append(vals[a][b])
+                else:
+                    vals.append(_jvm_hop(vals[a], types[a]))
+            return pd.DataFrame({f"c{k}": vals[i].reset_index(drop=True)
+                                 for i, k in roots})
+
+        return pandas_udf(fused, out_t)
+
+
+def _jvm_hop(value, spark_type):
+    """value as a pandas UDF receives it after the Arrow round trip
+    through the JVM (the worker's own serializer settings for scalar
+    pandas UDFs: struct as DataFrame, Arrow cast on). Text and WKB that
+    are already in that form (object dtype, str or bytes or None) are
+    passed on as the same Series, so the readers still share one lane
+    parse per batch (functions/lanes.batch_of keys on the object)."""
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasUDFSerializer
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import BinaryType, StringType
+
+    kind = {StringType: str, BinaryType: bytes}.get(type(spark_type))
+    if kind is not None and value.dtype == object \
+            and all(v is None or type(v) is kind for v in value):
+        return value
+
+    ser = ArrowStreamPandasUDFSerializer(
+        "UTC", False, True, True, "dict", False, True, None)
+    batch = ser._create_batch(
+        [(value, to_arrow_type(spark_type), spark_type)])
+    return ser.arrow_to_pandas(batch.column(0), 0)
 
 
 def sql_st(spark: SparkSession, sql: str) -> DataFrame:
@@ -396,7 +685,7 @@ def salt_union_aggr_sql(sql: str, buckets: int = UNION_AGGR_SALT_BUCKETS
     overhead is one extra exchange of <= buckets x groups narrow partial
     rows — negligible at every size — so the rewrite is unconditional for
     statements it recognizes (strictly safer than thresholding on a
-    guess). SPARK_GRAFT_NO_UNION_AGGR_SALT=1 disables (A/B probes).
+    guess). Plain spark.sql on the same text is the unsalted plan.
 
     Strictly scoped: the statement must be a single depth-0
     SELECT ... FROM ... GROUP BY ... block (no HAVING / ORDER BY / LIMIT /
@@ -405,10 +694,6 @@ def salt_union_aggr_sql(sql: str, buckets: int = UNION_AGGR_SALT_BUCKETS
     expression over >= 1 ST_Union_Aggr call and no other aggregate.
     Anything else is returned verbatim (the plain bounded-hold UDAF path
     still applies)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_UNION_AGGR_SALT"):
-        return sql
     if "st_union_aggr" not in sql.lower():
         return sql
     stmt = sql.rstrip().rstrip(";")

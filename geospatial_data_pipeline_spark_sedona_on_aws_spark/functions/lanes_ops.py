@@ -1467,6 +1467,13 @@ def area(s: pd.Series, scalar_fn) -> pd.Series:
     return f.finish(scalar_fn)
 
 
+def _commas(arr) -> np.ndarray:
+    """Comma count per row as int64; NULL rows count 0 (no lane puts
+    a value on them), so the cast never meets a NaN."""
+    return pc.fill_null(pc.count_substring(arr, pattern=","), 0).to_numpy(
+        zero_copy_only=False).astype(np.int64)
+
+
 def npoints(s: pd.Series, scalar_fn) -> pd.Series:
     """Vertex counts by comma count on fully-VALIDATING patterns: a
     single-ring POLYGON counts the closing duplicate (+1 when the text
@@ -1478,8 +1485,7 @@ def npoints(s: pd.Series, scalar_fn) -> pd.Series:
     def ncommas():
         nonlocal commas
         if commas is None:
-            commas = pc.count_substring(f.b.arr, pattern=",").to_numpy(
-                zero_copy_only=False).astype(np.int64)
+            commas = _commas(f.b.arr)
         return commas
 
     v, g = f.b.extract(FPOLY_1RING)
@@ -1512,9 +1518,7 @@ def num_geometries(s: pd.Series, scalar_fn) -> pd.Series:
         f.put(f.b.match(pat), 1)
     m = f.b.match(FMPOINT_ANY)
     if m.any():
-        commas = pc.count_substring(f.b.arr, pattern=",").to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        f.put(m, commas + 1)
+        f.put(m, _commas(f.b.arr) + 1)
     return f.finish(scalar_fn)
 
 

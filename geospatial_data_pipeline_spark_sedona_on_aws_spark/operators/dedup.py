@@ -172,15 +172,22 @@ def _bucket_pairs(grouped: DataFrame, ids_col: str = "ids",
     100k-member bucket lands 5·10⁹ pairs on one task) fans out into
     nb(nb+1)/2 tasks, each shipping only its two ≤block-element slices,
     with per-task pair fan-out capped at block². The spine is round-robin
-    repartitioned so mega-bucket tasks spread across the cluster; the
-    exchange volume is O(bucket table) — the same order the band groupBy
-    just shuffled. The emitted pair SET is identical in both regimes
+    repartitioned into one partition per mega-bucket block task (never
+    fewer than the cores), so those tasks spread across the cluster
+    whatever its size; counting them is one aggregate over the bucket
+    sizes. The exchange volume is O(bucket table) — the same order the
+    band groupBy just shuffled. The emitted pair SET is identical in both regimes
     (arrays sorted; same-block tasks pair i<j, cross-block pair all with
     bi<bj preserving order) — bounded and spread, never sampled, so
     recall is exactly 100% and the SQL oracles need no policy mirror."""
     ids = F.col(ids_col)
     sess = grouped.sparkSession
     nb = F.ceil(F.size(ids) / F.lit(block)).cast("int")
+    # the bucket table is materialized once: the task count and the
+    # tasks below both read it, and neither recomputes its upstream
+    grouped = grouped.localCheckpoint(eager=True)
+    mega_tasks = (grouped.where(F.size(ids) > block)
+                  .agg(F.sum(nb * (nb + 1) / 2)).first()[0]) or 0
     spine = F.flatten(F.transform(
         F.sequence(F.lit(0), nb - 1),
         lambda i: F.transform(
@@ -199,7 +206,8 @@ def _bucket_pairs(grouped: DataFrame, ids_col: str = "ids",
             .alias("__lj"),
             (F.col("t.bi") == F.col("t.bj")).alias("__same"),
         )
-        .repartition(sess.sparkContext.defaultParallelism)
+        .repartition(max(sess.sparkContext.defaultParallelism,
+                         int(mega_tasks)))
     )
 
     def within(arr):

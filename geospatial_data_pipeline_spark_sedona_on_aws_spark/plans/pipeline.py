@@ -232,10 +232,12 @@ def st_buffer_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (optimization round): buffer once, measure ONCE — the old
     # two-measure spelling had EvalPythonExec re-evaluating the shared
     # __buf chain per measure (one chained pipeline per output UDF) and
-    # paid an extra ArrowEvalPython round trip; ST_AreaNPoints_B is the
-    # literal composition of the two measures as one struct (guide §4),
-    # so the FromWKT → BufferRound → measure chain is single-consumer:
-    # one Python node, every kernel evaluated once. Same values —
+    # paid an extra ArrowEvalPython round trip; ST_BufferRoundStats_B is
+    # the literal composition of parse, buffer and both measures as one
+    # struct (guide §4): one Python node, every kernel evaluated once.
+    # chainrw.select_st now fuses the plain spelling the same way; this
+    # builder keeps the hand-fused UDF, which the benchmark's kernel
+    # probes time by name. Same values —
     # oracle unchanged; fused == composed pinned in
     # tests/test_binary_carrier.py.
     return lu.select(
@@ -529,22 +531,24 @@ def st_affine_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     arbitrary per-row angle), ST_Affine (exact 90° rotation (x,y)→(−y,x),
     centroid closed form), ST_Scale (area × |fx·fy|), ST_SnapToGrid /
     ST_ReducePrecision (off-tie inputs, so both engines' round agree),
-    ST_Expand ((w+2d)(h+2d)), ST_Multi (type tag survives a singleton)."""
+    ST_Expand ((w+2d)(h+2d)), ST_Multi (type tag survives a singleton).
+    The projection is fused (chainrw.select_st), so the affine+centroid
+    chain behind aff_cx/aff_cy runs once."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
     lu = fixtures.land_use_areas(spark, sf_dir)
-    # r14 (VERDICT item 2): the aff_cx/aff_cy pair re-ran
-    # ST_Affine∘ST_Centroid once per coordinate (EvalPythonExec chains
-    # per OUTPUT column) — the r13 fused ST_XY struct evaluates the
-    # affine+centroid chain once. Values and the oracle unchanged.
-    return lu.selectExpr(
+    return chainrw.select_st(
+        lu,
         "property_id",
         "CAST(round(ST_Area(ST_Rotate(land_geometry,"
         " 0.39269908169872414 * (property_id % 8))) * 10000) AS BIGINT)"
         " AS rot_area_q",
-        "ST_XY(ST_Centroid(ST_Affine(land_geometry,"
-        " 0D, -1D, 1D, 0D, 0D, 0D))) AS __ac",
+        "ST_X(ST_Centroid(ST_Affine(land_geometry,"
+        " 0D, -1D, 1D, 0D, 0D, 0D))) AS aff_cx",
+        "ST_Y(ST_Centroid(ST_Affine(land_geometry,"
+        " 0D, -1D, 1D, 0D, 0D, 0D))) AS aff_cy",
         "CAST(round(ST_Area(ST_Scale(land_geometry, 2D, 3D)) * 100)"
         " AS BIGINT) AS scale_area_q",
         "ST_X(ST_SnapToGrid(concat('POINT (', x1 + 0.3125, ' ', y1, ')'),"
@@ -555,10 +559,6 @@ def st_affine_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         " (1 + property_id % 5) / 4.0)) * 100) AS BIGINT) AS exp_area_q",
         "ST_GeometryType(ST_Multi(concat('POINT (', x1, ' ', y1, ')')))"
         " AS multi_type",
-    ).selectExpr(
-        "property_id", "rot_area_q",
-        "__ac.x AS aff_cx", "__ac.y AS aff_cy",
-        "scale_area_q", "snap_x", "rp_x", "exp_area_q", "multi_type",
     )
 
 ST_AFFINE_OPS_ORACLE = f"""
@@ -591,7 +591,10 @@ def st_measure_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ST_MaxDistance / ST_LongestLine to an outside corner point,
     ST_HausdorffDistance of collinear shifted segments (= shift),
     ST_FrechetDistance of antiparallel segments (= diagonal coupling),
-    ST_ShortestLine from an outside point (lands on the rect corner)."""
+    ST_ShortestLine from an outside point (lands on the rect corner).
+    The projection is fused (chainrw.select_st): the longest/shortest
+    line behind each measure pair runs once."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
@@ -601,13 +604,8 @@ def st_measure_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
                  " x2 + 2 + x2 - x1, ' ', y1, ')')")
     seg_rev = ("concat('LINESTRING (', x2, ' ', y1 + 3, ', ', x1, ' ',"
                " y1 + 3, ')')")
-    # r13 (optimization round): the ll_x/ll_y and sl_x/sl_len pairs each
-    # consumed the same derived line — EvalPythonExec evaluated
-    # LongestLine/ShortestLine (and the EndPoint behind them) once PER
-    # measure; ST_XY / ST_EndXYLen fuse each pair into one struct so the
-    # line kernels run once. Same values (literal compositions,
-    # oracle-pinned).
-    return lu.selectExpr(
+    return chainrw.select_st(
+        lu,
         "property_id",
         "ST_Perimeter(land_geometry) AS perim",
         "CAST(round(ST_Length(ST_BoundingDiagonal(land_geometry))"
@@ -618,17 +616,17 @@ def st_measure_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         " AS ang_q",
         "CAST(round(ST_MaxDistance(concat('POINT (', x1 - 1, ' ', y1 - 1,"
         " ')'), land_geometry) * 10000) AS BIGINT) AS md_q",
-        "ST_XY(ST_EndPoint(ST_LongestLine(concat('POINT (', x1 - 1, ' ',"
-        " y1 - 1, ')'), land_geometry))) AS __ll",
+        "ST_X(ST_EndPoint(ST_LongestLine(concat('POINT (', x1 - 1, ' ',"
+        " y1 - 1, ')'), land_geometry))) AS ll_x",
+        "ST_Y(ST_EndPoint(ST_LongestLine(concat('POINT (', x1 - 1, ' ',"
+        " y1 - 1, ')'), land_geometry))) AS ll_y",
         f"ST_HausdorffDistance({seg_a}, {seg_shift}) AS hd",
         f"CAST(round(ST_FrechetDistance({seg_a}, {seg_rev}) * 10000)"
         " AS BIGINT) AS fd_q",
-        "ST_EndXYLen(ST_ShortestLine(concat('POINT (', x1 - 3, ' ',"
-        " y1, ')'), land_geometry)) AS __sl",
-    ).selectExpr(
-        "property_id", "perim", "diag_q", "ang_q", "md_q",
-        "__ll.x AS ll_x", "__ll.y AS ll_y", "hd", "fd_q",
-        "__sl.x AS sl_x", "__sl.len AS sl_len",
+        "ST_X(ST_EndPoint(ST_ShortestLine(concat('POINT (', x1 - 3, ' ',"
+        " y1, ')'), land_geometry))) AS sl_x",
+        "ST_Length(ST_ShortestLine(concat('POINT (', x1 - 3, ' ', y1,"
+        " ')'), land_geometry)) AS sl_len",
     )
 
 ST_MEASURE_OPS_ORACLE = f"""
@@ -697,10 +695,8 @@ def st_shape_edit_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"ST_IsRing({ring}) AS ring_is_ring",
         f"ST_IsSimple({diag}) AS diag_simple",
         f"ST_IsSimple({bow}) AS bow_simple",
-        # fused X+Y struct: PointOnSurface runs once, not per coordinate
-        # (r13 optimization round; see st_measure_ops)
-        "ST_XY(ST_PointOnSurface(land_geometry)).x AS pos_x",
-        "ST_XY(ST_PointOnSurface(land_geometry)).y AS pos_y",
+        "ST_X(ST_PointOnSurface(land_geometry)) AS pos_x",
+        "ST_Y(ST_PointOnSurface(land_geometry)) AS pos_y",
         "CAST(round(ST_MinimumBoundingRadius(land_geometry) * 10000)"
         " AS BIGINT) AS mbr_q",
         f"ST_X(ST_GeometricMedian({corners})) AS gm_x",
@@ -977,7 +973,10 @@ def st_edit_line_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r7 line editors: ST_AddPoint / ST_RemovePoint / ST_SetPoint (vertex
     surgery round trip), ST_Snap (vertex snap + segment insertion, the
     JTS two-phase snapper), ST_Split (by interior point — piece count and
-    lengths). All closed forms on the bottom edge of each parcel."""
+    lengths). All closed forms on the bottom edge of each parcel. The
+    projection is fused (chainrw.select_st): AddPoint, RemovePoint and
+    Split each run once per row."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
@@ -986,31 +985,25 @@ def st_edit_line_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     midpt = "concat('POINT (', (x1 + x2) / 2.0, ' ', y1 + 1, ')')"
     mid_on = "concat('POINT (', (x1 + x2) / 2.0, ' ', y1, ')')"
     near = "concat('POINT (', (x1 + x2) / 2.0, ' ', y1 + 0.25, ')')"
-    # r14 (VERDICT item 2): the vertex-surgery round trip re-ran
-    # ST_AddPoint four times and ST_RemovePoint twice per row (one
-    # EvalPythonExec chain per OUTPUT column), and ST_Split twice —
-    # ST_AddRmStats / ST_SplitStats are literal compositions of the
-    # same lanes, each edit evaluated once. Values and the oracle
-    # unchanged.
-    return lu.selectExpr(
+    return chainrw.select_st(
+        lu,
         "property_id",
-        f"ST_AddRmStats({bottom}, {midpt}, 1) AS __ar",
+        f"ST_NPoints(ST_AddPoint({bottom}, {midpt}, 1)) AS ap_np",
+        f"CAST(round(ST_Length(ST_AddPoint({bottom}, {midpt}, 1))"
+        " * 10000) AS BIGINT) AS ap_len_q",
+        f"ST_NPoints(ST_RemovePoint(ST_AddPoint({bottom}, {midpt}, 1),"
+        " 1)) AS rp_np",
+        f"ST_Length(ST_RemovePoint(ST_AddPoint({bottom}, {midpt}, 1),"
+        " 1)) AS rp_len",
         f"ST_X(ST_EndPoint(ST_SetPoint({bottom}, -1,"
         " concat('POINT (', x2 + 5, ' ', y1, ')')))) AS sp_x",
         f"ST_X(ST_StartPoint(ST_Snap(concat('LINESTRING (', x1 + 0.25,"
         f" ' ', y1, ', ', x2, ' ', y2, ')'),"
         " concat('POINT (', x1, ' ', y1, ')'), 0.5D))) AS snap_x",
         f"ST_NPoints(ST_Snap({bottom}, {near}, 0.5D)) AS snap_np",
-        f"ST_SplitStats({bottom}, {mid_on}) AS __sp",
-    ).selectExpr(
-        "property_id",
-        "__ar.ap_np AS ap_np",
-        "CAST(round(__ar.ap_len * 10000) AS BIGINT) AS ap_len_q",
-        "__ar.rp_np AS rp_np",
-        "__ar.rp_len AS rp_len",
-        "sp_x", "snap_x", "snap_np",
-        "__sp.n AS split_n",
-        "CAST(round(__sp.len0 * 100) AS BIGINT) AS split_len_q",
+        f"ST_NumGeometries(ST_Split({bottom}, {mid_on})) AS split_n",
+        f"CAST(round(ST_Length(ST_GeometryN(ST_Split({bottom},"
+        f" {mid_on}), 0)) * 100) AS BIGINT) AS split_len_q",
     )
 
 ST_EDIT_LINE_OPS_ORACLE = f"""
@@ -1041,7 +1034,10 @@ def st_misc_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ST_RemoveRepeatedPoints, ST_Force3D (+ ST_HasZ / ST_Z readback),
     ST_Project (spherical forward problem — due-east at the equator is
     exactly lon + degrees(d/R)), ST_XMin/XMax/YMin/YMax, ST_NumPoints
-    (PostGIS: linestrings only). All closed forms on the parcel ints."""
+    (PostGIS: linestrings only). All closed forms on the parcel ints.
+    The projection is fused (chainrw.select_st): the LineMerge and
+    Project results behind each measure pair are computed once."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
@@ -1053,34 +1049,27 @@ def st_misc_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup = ("concat('LINESTRING (', x1, ' ', y1, ', ', x1, ' ', y1, ', ',"
            " x2, ' ', y1, ', ', x2, ' ', y1, ')')")
     eqpt = "concat('POINT (', CAST(x1 % 90 AS DOUBLE), ' 0)')"
-    # r13 (optimization round): the LineMerge and Project pairs each
-    # consumed the same derived geometry once per measure — fused structs
-    # (ST_NumGeomsLength, ST_XY) run each kernel once; same values
-    # (literal compositions, oracle-pinned)
-    return lu.selectExpr(
+    return chainrw.select_st(
+        lu,
         "property_id",
         f"CAST(round(ST_Area(ST_MakePolygon({ring})) * 100) AS BIGINT)"
         " AS mkpoly_area_q",
-        f"ST_NumGeomsLength(ST_LineMerge({mls})) AS __lm",
+        f"ST_NumGeometries(ST_LineMerge({mls})) AS lm_n",
+        f"ST_Length(ST_LineMerge({mls})) AS lm_len",
         f"ST_NPoints(ST_RemoveRepeatedPoints({dup})) AS rrp_np",
         "ST_HasZ(ST_Force3D(concat('POINT (', x1, ' ', y1, ')'), 7D))"
         " AS f3d_hasz",
         "ST_Z(ST_Force3D(concat('POINT (', x1, ' ', y1, ')'), 7D))"
         " AS f3d_z",
-        f"ST_XY(ST_Project({eqpt}, 111194.9266D,"
-        " 1.5707963267948966D)) AS __proj",
+        f"CAST(round(ST_X(ST_Project({eqpt}, 111194.9266D,"
+        " 1.5707963267948966D)) * 1000000) AS BIGINT) AS proj_lon_q",
+        f"CAST(round(ST_Y(ST_Project({eqpt}, 111194.9266D,"
+        " 1.5707963267948966D)) * 1000000) AS BIGINT) AS proj_lat_q",
         "ST_XMin(land_geometry) AS bxmin",
         "ST_XMax(land_geometry) AS bxmax",
         "ST_YMin(land_geometry) AS bymin",
         "ST_YMax(land_geometry) AS bymax",
         f"ST_NumPoints({ring}) AS np_ring",
-    ).selectExpr(
-        "property_id", "mkpoly_area_q",
-        "__lm.n AS lm_n", "__lm.len AS lm_len",
-        "rrp_np", "f3d_hasz", "f3d_z",
-        "CAST(round(__proj.x * 1000000) AS BIGINT) AS proj_lon_q",
-        "CAST(round(__proj.y * 1000000) AS BIGINT) AS proj_lat_q",
-        "bxmin", "bxmax", "bymin", "bymax", "np_ring",
     )
 
 ST_MISC_OPS_ORACLE = f"""
@@ -1991,26 +1980,21 @@ def st_transform_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     r8: the double transform chains on the BINARY carrier — one text
     parse at the edge, both projections as whole-batch numpy over the
     packed coordinate array, measures straight off the WKB (never back
-    through text; functions/geomb.py)."""
+    through text; functions/geomb.py). The projection is fused
+    (chainrw.select_st): one Python node, the double transform computed
+    once for both measures."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
     lu = fixtures.land_use_areas(spark, sf_dir)
-    # r13 (optimization round): ST_TransformRoundtrip_B fuses the double
-    # transform (one Python link instead of two frontiers) and
-    # ST_AreaNPoints_B fuses the two measures (the old spelling
-    # re-evaluated the shared __rt chain per measure); whole chain is
-    # single-consumer → ONE ArrowEvalPython node, every kernel once
-    # (guide §4). Both fused functions are literal compositions of the
-    # unfused kernels — same values, oracle unchanged.
-    return lu.select(
+    rt = ("ST_Transform(ST_Transform(land_geometry, 'EPSG:3857',"
+          " 'EPSG:5880'), 'EPSG:5880', 'EPSG:3857')")
+    return chainrw.select_st(
+        lu,
         "property_id",
-        F.expr("ST_TransformRoundtripStats_B(land_geometry,"
-               " 'EPSG:3857', 'EPSG:5880')").alias("__m"),
-    ).select(
-        "property_id",
-        F.expr("CAST(round(__m.area * 1000) AS BIGINT)").alias("area_q"),
-        F.expr("__m.npts").alias("n_vertices"),
+        f"CAST(round(ST_Area({rt}) * 1000) AS BIGINT) AS area_q",
+        f"ST_NPoints({rt}) AS n_vertices",
     )
 
 ST_TRANSFORM_ROUNDTRIP_ORACLE = f"""

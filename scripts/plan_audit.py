@@ -30,17 +30,23 @@ Streaming/stateful queries that EXECUTE on construction (foreachBatch
 drains, catalog publishes) are audited post-hoc like the rest — the
 returned DataFrame's plan is the final read.
 
-Usage: python scripts/plan_audit.py [sf_dir] > PLAN_AUDIT_r6.md
+Per query it also counts the ArrowEvalPython nodes (arrow) and the
+Python UDF results they compute (udfs: one per pythonUDFn output
+attribute; a chain of nested UDFs computes one result).
+
+Usage: python scripts/plan_audit.py [sf_dir [query ...]] > PLAN_AUDIT_r6.md
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+ONLY = sys.argv[2:]
 
 # dimension tables whose FileScan is a bounded broadcast side by fixture
 # construction (50-row supplier-derived dims); a fact-table scan under a
@@ -173,6 +179,9 @@ def audit(plan: str) -> dict:
     joins = re.findall(
         r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
         r"BroadcastNestedLoopJoin|CartesianProduct)", plan)
+    # the node line lists its UDF expressions, then their result attributes
+    arrow = [ln.split("], [", 1)[-1] for ln in lines
+             if re.search(r"\bArrowEvalPython \[", ln)]
     py = re.findall(
         r"(ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|"
         r"MapInArrow|BatchEvalPython|PythonUDTF|FlatMapGroupsInPandasWithState|"
@@ -194,6 +203,8 @@ def audit(plan: str) -> dict:
                          for j in joins}),
         "py": sorted({p.replace("EvalPython", "").replace("FlatMapGroupsInPandas", "GrpPandas")
                       for p in py}),
+        "arrow": len(arrow),
+        "udfs": sum(len(re.findall(r"pythonUDF\d+#", ln)) for ln in arrow),
         "flags": flags,
     }
 
@@ -210,9 +221,12 @@ def main() -> None:
     print("empty everywhere): CARTESIAN, BNL-unbounded, unpushed-filter;")
     print("plus a source-level new-collect audit at the end.")
     print("Generated by scripts/plan_audit.py.\n")
-    print("| query | scans | max cols read | exchanges | joins | py stages | flags |")
-    print("|---|---|---|---|---|---|---|")
+    print("| query | scans | max cols read | exchanges | joins | py stages"
+          " | arrow | udfs | flags |")
+    print("|---|---|---|---|---|---|---|---|---|")
     for name, fn in QUERIES.items():
+        if ONLY and name not in ONLY:
+            continue
         try:
             plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
             a = audit(plan)
@@ -220,9 +234,10 @@ def main() -> None:
                   f" {len(a['exchanges'])}: {', '.join(a['exchanges'][:4])} |"
                   f" {', '.join(a['joins']) or '-'} |"
                   f" {', '.join(a['py']) or '-'} |"
+                  f" {a['arrow']} | {a['udfs']} |"
                   f" {', '.join(a['flags']) or '-'} |")
         except Exception as ex:  # audit must never die mid-table
-            print(f"| {name} | ERROR: {str(ex)[:80]} | | | | | |")
+            print(f"| {name} | ERROR: {str(ex)[:80]} | | | | | | | |")
         sys.stdout.flush()
     col_flags = _collect_site_audit()
     print("\n## Driver-collect site audit\n")

@@ -2,8 +2,8 @@
 
 Layer 1: `chainrw.rewrite` string-level unit tests — chains of >= 2
 twin-covered calls move to the `_B` carrier, lone calls and hygiene-only
-chains stay on text, non-ST_ tokens (strings, identifiers, keywords,
-arithmetic) are copied verbatim, and the kill switch restores identity.
+chains stay on text, and non-ST_ tokens (strings, identifiers, keywords,
+arithmetic, bare parenthesised groups) are copied verbatim.
 
 Layer 2: `kernel/packed._pack_ragged` / `_emit_ragged` engagement tests —
 single-kind variable-shape batches must take the vectorized lane (not
@@ -14,6 +14,11 @@ bytes) must bail to the strict loop and still round-trip.
 Layer 3: Spark parity — the SAME query text through `select_st` (rewritten)
 and through plain `selectExpr` (text path) returns identical rows, on the
 reference's own chain spelling (spark_job/process_geodata.py:120-139).
+
+Layer 4: projection fusion — `_Fusion` plans one struct pandas UDF per
+projection (shared calls once, struct field access, SQL leaves as input
+columns, aggregates and lone calls left alone), and every builder routed
+through `select_st` returns exactly the rows of its unfused expressions.
 """
 
 from __future__ import annotations
@@ -29,6 +34,7 @@ from hypothesis import strategies as st
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import chainrw as CR
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import geomtypes as GT
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import packed as PK
+from tests.conftest import SF_SMOKE
 
 
 # ------------------------------------------------------------- layer 1
@@ -110,10 +116,35 @@ def test_rewrite_unknown_st_name_blocks_that_node_but_not_args():
     assert got2 == "ST_NPoints(ST_ConvexHull(ST_GeomFromWKT(w)))"
 
 
-def test_rewrite_kill_switch(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_CHAINRW", "1")
-    e = "ST_Area(ST_GeomFromWKT(wkt)) AS a"
+def test_rewrite_chain_fed_by_st_call_stays_on_text():
+    # the producer's WKT feeds the text lanes directly; a carrier edge
+    # would re-parse it (ST_Affine emits clockwise rects, off the
+    # carrier's parse lanes)
+    e = "ST_X(ST_Centroid(ST_Affine(g, 0D, -1D, 1D, 0D, 0D, 0D))) AS cx"
     assert CR.rewrite(e) == e
+    # the consumer stays on text; the column-fed chain inside it still
+    # moves to the carrier on its own
+    assert CR.rewrite("ST_Distance(ST_Centroid(ST_GeomFromWKT(a)),"
+                      " ST_Rotate(b, 1D))") == \
+        ("ST_Distance(ST_AsText_B(ST_Centroid_B(ST_GeomFromWKT_B(a))),"
+         " ST_Rotate(b, 1D))")
+
+
+def test_rewrite_bare_paren_group_inside_argument():
+    # the ')' closing a bare group must not end the call argument
+    assert CR.rewrite(
+        "ST_Area(ST_BufferRound(ST_GeomFromWKT(w), (1 + k % 5) / 4.0, 8))"
+    ) == "ST_Area_B(ST_BufferRound_B(ST_GeomFromWKT_B(w),"\
+        " (1 + k % 5) / 4.0, 8))"
+    # nested bare groups, a bare group as a whole argument, and a comma
+    # inside a group
+    assert CR.rewrite(
+        "ST_NPoints(ST_BufferRound(ST_GeomFromWKT(w),"
+        " ((1 + (k % 5)) * (2)) / 4.0, (greatest(8, k)))) AS n"
+    ) == ("ST_NPoints_B(ST_BufferRound_B(ST_GeomFromWKT_B(w),"
+          " ((1 + (k % 5)) * (2)) / 4.0, (greatest(8, k)))) AS n")
+    assert CR.rewrite("(ST_Area(ST_GeomFromWKT(w)) + 1) * 2") == \
+        "(ST_Area_B(ST_GeomFromWKT_B(w)) + 1) * 2"
 
 
 def test_rewrite_case_insensitive_names():
@@ -305,7 +336,7 @@ def test_salt_rewrite_canonical_shapes():
     assert got3.count("AS __ua_p0") == 1 and "__ua_p1" not in got3
 
 
-def test_salt_rewrite_bails_on_unrecognized_shapes(monkeypatch):
+def test_salt_rewrite_bails_on_unrecognized_shapes():
     f = CR.salt_union_aggr_sql
     keep = [
         # mixed with another aggregate: the split is not union-shaped
@@ -325,9 +356,6 @@ def test_salt_rewrite_bails_on_unrecognized_shapes(monkeypatch):
     ]
     for s in keep:
         assert f(s) == s, s
-    monkeypatch.setenv("SPARK_GRAFT_NO_UNION_AGGR_SALT", "1")
-    s = "SELECT k, ST_Union_Aggr(g) AS u FROM t GROUP BY k"
-    assert f(s) == s
 
 
 @pytest.mark.usefixtures("spark")
@@ -473,14 +501,6 @@ def test_fuse_npoints_segmentize_rewrite():
     # non-fusable consumers keep the plain spelling
     assert "ST_SegmentizeNPoints" not in C.rewrite(
         "ST_Length(ST_Segmentize(g, 1D))")
-    # the A/B kill switch disables the fusion too
-    import os
-    os.environ["SPARK_GRAFT_NO_CHAINRW"] = "1"
-    try:
-        assert C.rewrite("ST_NPoints(ST_Segmentize(g, 1D))") == \
-            "ST_NPoints(ST_Segmentize(g, 1D))"
-    finally:
-        del os.environ["SPARK_GRAFT_NO_CHAINRW"]
 
 
 def test_fused_segmentize_npoints_parity(spark):
@@ -509,3 +529,231 @@ def test_fused_segmentize_npoints_parity(spark):
         assert r.fused == r.composed, r
     # spot-check the closed form on the unit-step rect: 2(w+h)+1
     assert both[0].fused == 2 * (9 + 4) + 1
+    # the rewritten spelling (st_expr) equals the plain text (F.expr)
+    from pyspark.sql import functions as F
+
+    text = "ST_NPoints(ST_Segmentize(g, m))"
+    rw = df.select(CR.st_expr(text).alias("v")).collect()
+    plain = df.select(F.expr(text).alias("v")).collect()
+    assert rw == plain
+
+
+# ------------------------------------------------------------- layer 4
+
+def _calls(fusion, name: str) -> int:
+    return sum(1 for k in fusion.keys if k.startswith(name + "("))
+
+
+def test_fusion_plan_shares_calls_and_keeps_sql_verbatim():
+    f = CR._Fusion([
+        "id",
+        "CAST(round(ST_X(ST_Centroid(g)) * 10) AS BIGINT) AS cx",
+        "ST_Y(ST_Centroid( g )) AS cy",
+        "ST_MaximumInscribedCircle(p).radius AS r",
+        "ST_X(ST_MaximumInscribedCircle(p).center) AS mx",
+        "ST_Union_Aggr(g) AS u",
+    ])
+    assert f.fused
+    # one centroid and one inscribed circle, however many readers
+    assert _calls(f, "st_centroid") == 1
+    assert _calls(f, "st_maximuminscribedcircle") == 1
+    assert f.leaves == ["g", "p"]
+    slot = CR._SLOT
+    assert f.texts == [
+        "id",
+        f"CAST(round({slot}.c0 * 10) AS BIGINT) AS cx",
+        f"{slot}.c1 AS cy",
+        f"{slot}.c2 AS r",
+        f"{slot}.c3 AS mx",
+        "ST_Union_Aggr(g) AS u",        # aggregates are left to Spark
+    ]
+
+
+def test_fusion_plan_sql_leaves_are_input_columns():
+    f = CR._Fusion([
+        "ST_Distance(ST_Point(x, 1.5D), concat('POINT (', a, ' 0)')) AS d",
+        "ST_X(ST_Point(x, 1.5D)) AS px",
+        "ST_Area(ST_Buffer(g, ST_Length(g) * 2)) AS ba",
+    ])
+    assert f.fused
+    assert f.leaves == ["x", "1.5D", "concat('POINT (', a, ' 0)')", "g",
+                        "ST_Length(g) * 2"]
+    assert _calls(f, "st_point") == 1
+
+
+def test_fusion_plan_leaves_small_projections_alone():
+    for exprs in (["id", "ST_Area(g) AS a"],
+                  ["ST_Union_Aggr(g) AS u", "ST_Area(g) AS a"],
+                  ["id", "x + 1 AS y"],
+                  # a whole struct value is not a flat field: left as is
+                  ["ST_MaximumInscribedCircle(g) AS m", "ST_Area(g) AS a"]):
+        f = CR._Fusion(exprs)
+        assert not f.fused and f.texts == exprs, exprs
+
+
+def test_select_st_fused_keeps_unaliased_column_names(spark):
+    from pyspark.sql import functions as F
+
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import (
+        register_spatial_functions,
+    )
+
+    register_spatial_functions(spark)
+    df = spark.createDataFrame(
+        [(1, "LINESTRING (0 0, 3 4)"), (2, None)], "id long, w string")
+    exprs = ["id", "ST_Length(ST_GeomFromWKT(w))",
+             "ST_NPoints(ST_GeomFromWKT(w)) AS n"]
+    got = CR.select_st(df, *exprs)
+    plain = df.select(*[F.expr(CR.rewrite(e)) for e in exprs])
+    assert got.columns == plain.columns
+    assert sorted(got.collect()) == sorted(plain.collect())
+
+
+#: builders whose hand-fused struct UDFs the projection fuser replaced
+_FUSED_BUILDERS = [
+    "st_affine_ops", "st_measure_ops", "st_shape_edit_ops",
+    "st_edit_line_ops", "st_misc_ops", "st_transform_roundtrip",
+    "st_from_text_ops", "st_orientation_ops", "st_clearance_ops",
+]
+
+
+
+def _parcels(spark, rows: int):
+    """Fixture parcels (integer coordinates) plus a NULL parcel, and the
+    same parcels shifted onto float coordinates — the fixture's
+    land_use_areas schema, with or without the WKT column."""
+    from pyspark.sql import functions as F
+
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.plans import fixtures
+
+    base = (fixtures.land_use_areas(spark, SF_SMOKE, wkt=False)
+            .orderBy("property_id").limit(rows))
+    null = spark.createDataFrame([(-1,)], "property_id long").select(
+        *[F.lit(None).cast(t).alias(c) if c != "property_id" else c
+          for c, t in base.dtypes])
+    ints = base.unionByName(null)
+    floats = base.select(
+        "region_id", "season_id", "land_type_id", "property_id",
+        (F.col("x1") + 0.25).alias("x1"), (F.col("y1") + 0.5).alias("y1"),
+        (F.col("x2") + 0.75).alias("x2"), (F.col("y2") + 0.125).alias("y2"))
+    return ints, floats
+
+
+@pytest.mark.parametrize("query", _FUSED_BUILDERS)
+def test_select_st_fusion_equals_unfused(spark, monkeypatch, query):
+    """Each builder's projection through select_st (rewritten, then fused
+    into one struct pandas UDF) returns exactly — bit for bit, column
+    names and types included — what the same rewritten expressions
+    return evaluated column by column unfused, on fixture rows, a NULL
+    row and float-coordinate rows, with 50-row Arrow batches."""
+    from pyspark.sql import functions as F
+
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.plans import fixtures
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.plans.registry import QUERIES
+
+    ints, floats = _parcels(spark, 120)
+    seen = []
+    select_st = CR.select_st
+
+    def record(df, *exprs):
+        seen.append((df, exprs))
+        return select_st(df, *exprs)
+
+    monkeypatch.setattr(CR, "select_st", record)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "50")
+    try:
+        for frame in (ints, floats):
+            def land_use(_spark, _sf, wkt=True, frame=frame):
+                if not wkt:
+                    return frame
+                return frame.withColumn("land_geometry", F.when(
+                    F.col("x1").isNotNull(),
+                    fixtures.rect_wkt("x1", "y1", "x2", "y2")))
+
+            monkeypatch.setattr(fixtures, "land_use_areas", land_use)
+            seen.clear()
+            fused = QUERIES[query](spark, SF_SMOKE)
+            (df, exprs), = seen
+            assert "ST_Fused_" in \
+                fused._jdf.queryExecution().executedPlan().toString()
+            plain = df.select(*[F.expr(CR.rewrite(e)) for e in exprs])
+            assert fused.dtypes == plain.dtypes
+            got = sorted(repr(tuple(r)) for r in fused.collect())
+            exp = sorted(repr(tuple(r)) for r in plain.collect())
+            assert len(got) == (121 if frame is ints else 120)
+            assert got == exp
+    finally:
+        spark.conf.set(conf, old)
+
+
+#: ArrowEvalPython nodes per builder before the projection fuser
+_ARROW_NODES_BEFORE = {**{q: 1 for q in _FUSED_BUILDERS},
+                       "st_point_line_ops": 2}
+
+
+def test_fused_builders_arrow_eval_python_nodes(spark):
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.plans.registry import QUERIES
+
+    nodes = {}
+    for q in _ARROW_NODES_BEFORE:
+        plan = QUERIES[q](spark, SF_SMOKE) \
+            ._jdf.queryExecution().executedPlan().toString()
+        nodes[q] = plan.count("ArrowEvalPython")
+    assert nodes["st_point_line_ops"] == 1, nodes
+    for q, before in _ARROW_NODES_BEFORE.items():
+        assert nodes[q] <= before, (q, nodes[q], before)
+
+
+def test_jvm_hop_matches_what_a_udf_argument_receives():
+    """A node value feeding a multi-argument call is handed over as
+    Spark hands a UDF its argument after the JVM round trip: a nullable
+    bigint arrives as float64 with NaN, a struct as a DataFrame."""
+    import pandas as pd
+    from pyspark.sql.types import (DoubleType, LongType, StringType,
+                                   StructField, StructType)
+
+    n = pd.Series([3, None, 2], dtype="Int64")
+    got = CR._jvm_hop(n, LongType())
+    assert str(got.dtype) == "float64"
+    assert got.iloc[0] == 3.0 and pd.isna(got.iloc[1])
+    t = StructType([StructField("c", StringType()),
+                    StructField("r", DoubleType())])
+    df = pd.DataFrame({"c": ["POINT (1 2)", None], "r": [0.5, None]})
+    back = CR._jvm_hop(df, t)
+    assert list(back.columns) == ["c", "r"]
+    assert back["c"].tolist() == ["POINT (1 2)", None]
+    # text already in round-trip form is passed on as the same object;
+    # a NaN null comes back as None, as from Arrow
+    w = pd.Series(["POINT (1 2)", None], dtype=object)
+    assert CR._jvm_hop(w, StringType()) is w
+    nan = pd.Series(["POINT (1 2)", float("nan")], dtype=object)
+    assert CR._jvm_hop(nan, StringType()).tolist() == ["POINT (1 2)", None]
+
+
+def test_select_st_fused_multi_argument_intermediates(spark):
+    """Node values used as one of several arguments (and shared with
+    other readers) give the unfused rows, NULL rows included."""
+    from pyspark.sql import functions as F
+
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import (
+        register_spatial_functions,
+    )
+
+    register_spatial_functions(spark)
+    df = spark.createDataFrame(
+        [(1, "LINESTRING (0 0, 3 4, 5 5)"), (2, None),
+         (3, "LINESTRING (1.5 1, 2 2.25)"), (4, "POINT (1 2)")],
+        "id long, g string")
+    exprs = ["id",
+             "ST_NPoints(g) AS n",
+             "ST_AsText(ST_PointN(g, ST_NPoints(g))) AS last",
+             "ST_X(ST_PointN(g, ST_NPoints(g))) AS last_x",
+             "ST_Distance(ST_StartPoint(g), ST_EndPoint(g)) AS span"]
+    got = CR.select_st(df, *exprs)
+    assert "ST_Fused_" in got._jdf.queryExecution().executedPlan().toString()
+    plain = df.select(*[F.expr(CR.rewrite(e)) for e in exprs])
+    assert got.dtypes == plain.dtypes
+    assert sorted(map(repr, got.collect())) == \
+        sorted(map(repr, plain.collect()))

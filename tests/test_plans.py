@@ -148,13 +148,17 @@ def test_aqe_splits_skewed_join_partition(spark):
     keys = ["spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.autoBroadcastJoinThreshold"]
+            "spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.shuffle.partitions"]
     old = {k: conf.get(k, None) for k in keys}
     try:
         conf.set(keys[0], "64KB")
         conf.set(keys[1], "32KB")
         conf.set(keys[2], "2")
         conf.set(keys[3], "-1")  # force SMJ so the skew path is exercised
+        # the hot key must be one of many partitions whatever the core
+        # count (the session sizes shuffle partitions to the cores)
+        conf.set(keys[4], "32")
         fact = spark.range(300_000).select(
             F.when(F.col("id") % 10 == 0, F.lit(7))
             .otherwise(F.pmod("id", F.lit(1000))).alias("k"),

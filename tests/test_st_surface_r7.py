@@ -620,38 +620,3 @@ def test_prop_subdivide_preserves_area(seed, mv):
     assert abs(S._area(sub) - S._area(g)) < 1e-6
     assert sub.count("POLYGON") >= 1
 
-
-def test_fused_xy_struct_udfs_equal_composition():
-    """r13 (optimization round): ST_XY / ST_EndXYLen / ST_NumGeomsLength
-    must equal the scalar compositions value-for-value (they are literal
-    compositions of the same lanes) — pinned on a point, a line, a
-    multiline, a non-point (NULL coords), and NULL input."""
-    import pandas as pd
-
-    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import (
-        spatial as SP,
-    )
-
-    rows = pd.Series([
-        "POINT (3 4)",
-        "LINESTRING (0 0, 3 4)",
-        "MULTILINESTRING ((0 0, 1 0), (5 5, 5 7))",
-        "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))",
-        None,
-    ], dtype=object)
-    xy = SP.st_xy.func(rows)
-    x = SP.st_x.func(rows)
-    y = SP.st_y.func(rows)
-    assert list(xy["x"].fillna(-1)) == list(x.fillna(-1))
-    assert list(xy["y"].fillna(-1)) == list(y.fillna(-1))
-    exl = SP.st_end_xy_len.func(rows)
-    ep = SP.st_endpoint.func(rows)
-    assert list(exl["x"].fillna(-1)) == list(SP.st_x.func(ep).fillna(-1))
-    assert list(exl["y"].fillna(-1)) == list(SP.st_y.func(ep).fillna(-1))
-    assert list(exl["len"].fillna(-1)) == \
-        list(SP.st_length.func(rows).fillna(-1))
-    nl = SP.st_numgeoms_length.func(rows)
-    assert list(nl["n"].fillna(-1)) == \
-        list(SP.st_numgeometries.func(rows).fillna(-1))
-    assert list(nl["len"].fillna(-1)) == \
-        list(SP.st_length.func(rows).fillna(-1))

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..kernel import boolean as B
 from ..kernel import geom as G
 from ..kernel import rectnp as R
+from .groups import group_slices
 
 def wkt_nums_sql(col: str) -> str:
     """SQL text of the WKT-numbers parse (array<double> of every number in
@@ -116,27 +117,6 @@ def _adaptive_partial(rect_arr: np.ndarray) -> np.ndarray:
             if len(cand) < n:
                 return cand
     return rect_arr
-
-
-def _group_slices(whole: pd.DataFrame, keys: Sequence[str]):
-    """(order, starts, ends) contiguous group slices of `whole` by `keys`
-    with Spark groupBy NULL semantics: rows are grouped by per-column
-    factorize CODES (NaN/None → one shared sentinel code), so NULL keys
-    form ONE group instead of lexsort-NaN splitting every row into its
-    own group — and object-typed key columns (strings) sort by code, not
-    by value comparison. One array pass; shared by both fused dissolve
-    operators' combine and finish stages."""
-    codes = np.column_stack([
-        pd.factorize(whole[k], use_na_sentinel=True)[0] for k in keys
-    ])
-    order = np.lexsort(tuple(codes[:, i]
-                       for i in range(codes.shape[1] - 1, -1, -1)))
-    codes = codes[order]
-    change = np.empty(len(codes), dtype=bool)
-    change[0] = True
-    change[1:] = (codes[1:] != codes[:-1]).any(axis=1)
-    starts = np.flatnonzero(change)
-    return order, starts, np.append(starts[1:], len(codes))
 
 
 def union_aggr(df: DataFrame, group_cols: Sequence[str], geom_col: str,
@@ -442,7 +422,7 @@ def dissolve_clip_area(df: DataFrame, group_cols: Sequence[str], geom_col: str,
             # ONE output frame — pandas groupby would build a small DataFrame
             # per (key, partition) group, which dominates at thousands of
             # groups per partition
-            order, starts, ends = _group_slices(whole, keys)
+            order, starts, ends = group_slices(whole, keys)
             kmat = whole[keys].to_numpy()[order]
             bmat = whole[bcols].to_numpy(dtype=np.float64)[order]
             out_k, out_b = [], []
@@ -486,7 +466,7 @@ def dissolve_clip_area(df: DataFrame, group_cols: Sequence[str], geom_col: str,
         if not frames:
             return
         whole = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        order, starts, ends = _group_slices(whole, keys)
+        order, starts, ends = group_slices(whole, keys)
         kmat = whole[keys].to_numpy()[order]
         bmat = whole[bcols].to_numpy(dtype=np.float64)[order]
         gw = whole["__gwkt"].to_numpy()[order]
@@ -650,7 +630,7 @@ def dissolve_transform_area(df: DataFrame, group_cols: Sequence[str],
         parts = []
         if acc:
             whole = pd.concat(acc, ignore_index=True)
-            order, starts, ends = _group_slices(whole, keys_all)
+            order, starts, ends = group_slices(whole, keys_all)
             kmat = whole[keys_all].to_numpy()[order]
             bmat = whole[bcols].to_numpy(dtype=np.float64)[order]
             out_k, out_b = [], []
@@ -686,7 +666,7 @@ def dissolve_transform_area(df: DataFrame, group_cols: Sequence[str],
             return
         whole = (pd.concat(frames, ignore_index=True)
                  if len(frames) > 1 else frames[0])
-        order, starts, ends = _group_slices(whole, keys_all)
+        order, starts, ends = group_slices(whole, keys_all)
         kmat = whole[keys_all].to_numpy()[order]
         bmat = whole[bcols].to_numpy(dtype=np.float64)[order]
         gw = whole["__gwkt"].to_numpy()[order]

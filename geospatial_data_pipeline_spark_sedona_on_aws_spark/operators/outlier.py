@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dbscan import _points
+from .groups import stream_groups
 
 K = 5
 SCALE = 10 ** 9
@@ -102,9 +103,10 @@ def local_outlier_factor(spark: SparkSession, sf_dir: str,
     exploded frame plus the previous pass's 100k-row output as a
     BROADCAST join. r13 (optimization round): the passes stream whole
     SORTED partitions through mapInPandas and loop the contiguous cell
-    groups inside Python — the old applyInPandas protocol shipped one
-    Arrow batch per ~225-row cell group (40k round trips at sf1.0;
-    measured ~95% of the stage task time blocked on them), while the
+    groups inside Python (groups.stream_groups) — the old applyInPandas
+    protocol shipped one Arrow batch per ~225-row cell group (40k round
+    trips at sf1.0; measured ~95% of the stage task time blocked on
+    them), while the
     per-cell numpy math is byte-identical. Measured: sf0.1 4.9 → 3.05 s,
     sf1.0 24.7 → 12.4 s. The lrd pass also emits each point's N_k member-id
     list (~K+ties longs), so the final LOF stage is a plain explode +
@@ -162,43 +164,12 @@ def local_outlier_factor(spark: SparkSession, sf_dir: str,
         # exchange instead of re-shuffling the 9x frame each
         # (r11; plan-asserted by test_lof_single_cell_exchange).
         # r13 (optimization round): rows are additionally SORTED by cell
-        # within each partition so the matrix passes can run as
-        # mapInPandas over whole partitions (cell groups are contiguous,
-        # at most one group straddles an Arrow batch boundary) — the old
-        # applyInPandas protocol shipped ONE Arrow batch per ~225-row
-        # cell group (4k groups at sf0.1, 40k at sf1.0; measured: the
-        # two Python stages spent ~95% of task time blocked on the
-        # per-group round trips, 46-55 s sumRun vs ~3 s CPU).
+        # within each partition so both matrix passes stream cell groups
+        # through stream_groups.
         .repartition(F.col("px"), F.col("py"))
         .sortWithinPartitions("px", "py")
         .localCheckpoint(eager=False)  # reused by both matrix passes
     )
-
-    def _per_cell(batches, cell_fn):
-        """Stream whole-partition Arrow batches, apply cell_fn to each
-        contiguous (px, py) group — identical math, amortized crossings.
-        Only the (possibly batch-straddling) tail group is carried."""
-        import pandas as pd
-
-        tail = None
-        for pdf in batches:
-            if tail is not None:
-                pdf = pd.concat([tail, pdf], ignore_index=True)
-                tail = None
-            if not len(pdf):
-                continue
-            lp, lq = pdf["px"].iat[-1], pdf["py"].iat[-1]
-            is_tail = (pdf["px"] == lp) & (pdf["py"] == lq)
-            tail = pdf.loc[is_tail]
-            body = pdf.loc[~is_tail]
-            outs = [out for _, g in body.groupby(["px", "py"], sort=False)
-                    for out in (cell_fn(None, g),) if len(out)]
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-        if tail is not None and len(tail):
-            out = cell_fn(None, tail)
-            if len(out):
-                yield out
 
     SENT = np.iinfo(np.int64).max
 
@@ -229,7 +200,7 @@ def local_outlier_factor(spark: SparkSession, sf_dir: str,
         d2[oidr[:, None] == idsc[None, :]] = SENT
         return d2
 
-    def kd_fn(_key, pdf):
+    def kd_fn(pdf):
         if pdf[pdf["own"]].empty:
             return pd.DataFrame({"id": [], "kdist2": []})
         oid, O, ids, X = _group(pdf)
@@ -257,7 +228,7 @@ def local_outlier_factor(spark: SparkSession, sf_dir: str,
 
     kd = (
         ex.mapInPandas(
-            lambda it: _per_cell(it, kd_fn),
+            lambda it: stream_groups(it, ["px", "py"], kd_fn),
             "id long, kdist2 long")
         .localCheckpoint(eager=False)
     )
@@ -267,16 +238,14 @@ def local_outlier_factor(spark: SparkSession, sf_dir: str,
         # r14 (ADVICE r13, high): on the non-broadcast path the kd join
         # plans as a shuffle join keyed on id, which re-partitions and
         # re-sorts the 9x frame by id — destroying the cell-contiguity
-        # contract the lrd _per_cell pass requires (a fragmented cell
-        # with > K rows per fragment would yield silently wrong
-        # n_k/lrd/LOF; <= K raises the point-law error). Restore the
-        # contract with one extra exchange + in-partition sort — only on
-        # the 10^10-point path, where one more slim-row shuffle is noise
-        # next to the matrix passes.
+        # contract the lrd pass requires (stream_groups raises on a
+        # fragmented cell). Restore the contract with one extra exchange
+        # + in-partition sort — only on the 10^10-point path, where one
+        # more slim-row shuffle is noise next to the matrix passes.
         ex_kd = (ex_kd.repartition(F.col("px"), F.col("py"))
                  .sortWithinPartitions("px", "py"))
 
-    def lrd_fn(_key, pdf):
+    def lrd_fn(pdf):
         """lrd pass, r11-fused: besides (n_k, sum_reach2, lrd_q) it emits
         each own point's N_k MEMBER LIST (neighbor ids, ties included) —
         ~(K + ties) longs per point — so the LOF stage needs no third
@@ -328,7 +297,7 @@ def local_outlier_factor(spark: SparkSession, sf_dir: str,
 
     lrd = (
         ex_kd.mapInPandas(
-            lambda it: _per_cell(it, lrd_fn),
+            lambda it: stream_groups(it, ["px", "py"], lrd_fn),
             "id long, n_k long, kdist2 long, sum_reach2 long,"
             " lrd_q long, nbrs array<long>")
         .localCheckpoint(eager=False)

@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from ..sources.io import read_parquet_cached as _rpc
 from pyspark.sql import functions as F
 
+from .groups import stream_groups
+
 TOPK = 10
 N_QUERY_VECS = 100  # brute-force path: the N lowest vec_ids are the queries
 LSH_TOPK = 5
@@ -664,7 +666,9 @@ def lsh_ann(spark: SparkSession, sf_dir: str,
         # cosines stay bitwise-identical to _dot / the DuckDB oracle.
         CHUNK = 4096
 
-        def score(key, qp, cp):
+        def score(g):
+            # a bucket's query (side 0) and candidate (side 1) rows
+            qp, cp = g.loc[g["side"] == 0], g.loc[g["side"] == 1]
             if not len(qp) or not len(cp):
                 return pd.DataFrame(
                     {"query_id": [], "neighbor_id": [], "cos_sim": []})
@@ -689,14 +693,6 @@ def lsh_ann(spark: SparkSession, sf_dir: str,
                      "cos_sim": cos.ravel()[keep]}))
             return pd.concat(parts, ignore_index=True)
 
-        # r14 (optimization round 2, the LOF _per_cell pattern): the
-        # cogroup protocol shipped one Arrow batch PER BUCKET KEY on
-        # each side (~2^P keys — 16k round trips at sf1.0, the same
-        # protocol class LOF/IVF had); both sides now union with a side
-        # tag, hash-partition and sort by bucket once, and mapInPandas
-        # streams the contiguous groups, splitting each into its
-        # query/candidate halves for the identical score() body. Only
-        # the batch-straddling tail group is carried.
         qa = a.select(F.col("probe").alias("k"), F.lit(0).alias("side"),
                       "vec_id", "embedding", "nrm")
         cb = b.select(F.col("bucket").alias("k"), F.lit(1).alias("side"),
@@ -704,32 +700,9 @@ def lsh_ann(spark: SparkSession, sf_dir: str,
         rep = (qa.unionByName(cb).repartition(F.col("k"))
                .sortWithinPartitions("k", "side"))
 
-        def _stream(batches):
-            tail = None
-            for pdf in batches:
-                if tail is not None:
-                    pdf = pd.concat([tail, pdf], ignore_index=True)
-                    tail = None
-                if not len(pdf):
-                    continue
-                lk = pdf["k"].iat[-1]
-                is_tail = pdf["k"] == lk
-                tail = pdf.loc[is_tail]
-                body = pdf.loc[~is_tail]
-                outs = [out for _, g in body.groupby("k", sort=False)
-                        for out in (score(None, g.loc[g["side"] == 0],
-                                          g.loc[g["side"] == 1]),)
-                        if len(out)]
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-            if tail is not None and len(tail):
-                out = score(None, tail.loc[tail["side"] == 0],
-                            tail.loc[tail["side"] == 1])
-                if len(out):
-                    yield out
-
         pairs = rep.mapInPandas(
-            _stream, "query_id long, neighbor_id long, cos_sim double")
+            lambda it: stream_groups(it, ["k"], score),
+            "query_id long, neighbor_id long, cos_sim double")
     else:
         pairs = (
             a.join(b, F.col("a.probe") == F.col("b.bucket"))
@@ -930,38 +903,12 @@ def near_dup_topm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "rank": np.array(out_r, dtype=np.int32),
                 "cos_sim": np.array(out_c, dtype=np.float64)})
 
-        # r14 (the LOF _per_cell pattern): stream bucket groups through
-        # mapInPandas over bucket-sorted partitions instead of one Arrow
-        # batch per bucket key; identical topm body per group.
-        rep = (emb.repartition(F.col("bucket"))
-               .sortWithinPartitions("bucket"))
-
-        def _stream_topm(batches):
-            tail = None
-            for pdf in batches:
-                if tail is not None:
-                    pdf = pd.concat([tail, pdf], ignore_index=True)
-                    tail = None
-                if not len(pdf):
-                    continue
-                lk = pdf["bucket"].iat[-1]
-                is_tail = pdf["bucket"] == lk
-                tail = pdf.loc[is_tail]
-                body = pdf.loc[~is_tail]
-                outs = [out
-                        for _, g in body.groupby("bucket", sort=False)
-                        for out in (topm(g.reset_index(drop=True)),)
-                        if len(out)]
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-            if tail is not None and len(tail):
-                out = topm(tail.reset_index(drop=True))
-                if len(out):
-                    yield out
-
-        return rep.mapInPandas(
-            _stream_topm,
-            "doc_id long, neighbor_id long, rank int, cos_sim double")
+        return (emb.repartition(F.col("bucket"))
+                .sortWithinPartitions("bucket")
+                .mapInPandas(
+                    lambda it: stream_groups(it, ["bucket"], topm),
+                    "doc_id long, neighbor_id long, rank int,"
+                    " cos_sim double"))
     a, b = emb.alias("a"), emb.alias("b")
     directed = (
         a.join(b, "bucket")
@@ -1114,7 +1061,7 @@ def ivf_ann(spark: SparkSession, sf_dir: str, _rows=None) -> DataFrame:
         assign, schema="vec_id long, embedding array<float>, list_id long"
     )
 
-    def list_sims(key, pdf: pd.DataFrame):
+    def list_sims(pdf: pd.DataFrame):
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         qmask = ids < N_QUERY_VECS
         if not qmask.any() or len(ids) < 2:
@@ -1136,41 +1083,11 @@ def ivf_ann(spark: SparkSession, sf_dir: str, _rows=None) -> DataFrame:
             "cos_sim": sims.ravel()[mask.ravel()],
         })
 
-    def _per_list(batches):
-        """Stream whole-partition batches, applying list_sims to each
-        contiguous list_id group (r14, VERDICT r13 item 4 — the LOF
-        _per_cell pattern): the old groupBy().applyInPandas shipped one
-        Arrow batch per inverted list through the per-group protocol and
-        planned a FlatMapGroupsInPandas (GrpPandas) stage; rows arrive
-        here hash-partitioned and sorted by list_id, so groups are
-        contiguous and only a batch-straddling tail group is carried.
-        Per-group math is byte-identical (list_sims builds its matrices
-        from the group's rows; cosines are per-pair folds, order-free)."""
-        tail = None
-        for pdf in batches:
-            if tail is not None:
-                pdf = pd.concat([tail, pdf], ignore_index=True)
-                tail = None
-            if not len(pdf):
-                continue
-            last = pdf["list_id"].iat[-1]
-            is_tail = pdf["list_id"] == last
-            body = pdf.loc[~is_tail]
-            tail = pdf.loc[is_tail]
-            outs = [out for _, g in body.groupby("list_id", sort=False)
-                    for out in (list_sims(None, g),) if len(out)]
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-        if tail is not None and len(tail):
-            out = list_sims(None, tail)
-            if len(out):
-                yield out
-
     pairs = (
         assigned.repartition(F.col("list_id"))
         .sortWithinPartitions("list_id")
         .mapInPandas(
-            _per_list,
+            lambda it: stream_groups(it, ["list_id"], list_sims),
             schema="query_id long, neighbor_id long, cos_sim double")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))

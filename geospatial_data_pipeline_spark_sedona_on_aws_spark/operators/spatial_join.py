@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..plans import fixtures
 from ..sources import io as IO
+from .groups import stream_groups
 
 GRID = 16
 
@@ -898,8 +899,8 @@ def trajectory_similarity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hausdorff_sq": np.empty(0, np.int64),
     })
 
-    def verify_cell(key, pdf):
-        cx, cy = key
+    def verify_cell(pdf):
+        cx, cy = pdf["cx"].iat[0], pdf["cy"].iat[0]
         # empty trajectories have no Hausdorff distance to anything (the
         # oracle's GROUP BY never emits one; adversarial inputs only) —
         # drop before the cube, where a zero-length side would make
@@ -969,44 +970,11 @@ def trajectory_similarity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             }))
         return pd.concat(out, ignore_index=True) if out else _EMPTY
 
-    # r14 (optimization round 2, the LOF _per_cell pattern): the
-    # groupBy().applyInPandas protocol shipped ONE Arrow batch per grid
-    # cell; rows now hash-partition and sort by cell once, and
-    # mapInPandas streams whole partitions, looping the contiguous cell
-    # groups in Python with the identical verify_cell body (at most the
-    # batch-straddling tail group is carried between Arrow batches; a
-    # cell group can never straddle partitions — the repartition keys
-    # on the cell).
-    rep = (per_cell.repartition(F.col("cx"), F.col("cy"))
-           .sortWithinPartitions("cx", "cy"))
-
-    def _stream_cells(batches):
-        tail = None
-        for pdf in batches:
-            if tail is not None:
-                pdf = pd.concat([tail, pdf], ignore_index=True)
-                tail = None
-            if not len(pdf):
-                continue
-            lc, ld = pdf["cx"].iat[-1], pdf["cy"].iat[-1]
-            is_tail = (pdf["cx"] == lc) & (pdf["cy"] == ld)
-            tail = pdf.loc[is_tail]
-            body = pdf.loc[~is_tail]
-            outs = [out
-                    for key, g in body.groupby(["cx", "cy"], sort=False)
-                    for out in (verify_cell(
-                        key, g.reset_index(drop=True)),)
-                    if len(out)]
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-        if tail is not None and len(tail):
-            out = verify_cell((tail["cx"].iat[0], tail["cy"].iat[0]),
-                              tail.reset_index(drop=True))
-            if len(out):
-                yield out
-
-    return rep.mapInPandas(
-        _stream_cells, "ua bigint, ub bigint, hausdorff_sq bigint")
+    return (per_cell.repartition(F.col("cx"), F.col("cy"))
+            .sortWithinPartitions("cx", "cy")
+            .mapInPandas(
+                lambda it: stream_groups(it, ["cx", "cy"], verify_cell),
+                "ua bigint, ub bigint, hausdorff_sq bigint"))
 
 TRAJECTORY_SIMILARITY_ORACLE = f"""
 WITH ranked AS (

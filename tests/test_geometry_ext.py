@@ -602,7 +602,7 @@ def test_trajectory_blocking_prunes_but_loses_nothing(spark):
     # r6 shape: no pair-level join at all — trajectories group by cell id
     # (one hash exchange) and pairs are enumerated inside the cell task.
     # r14: the per-group applyInPandas protocol is gone — cells stream
-    # through mapInPandas over cell-sorted partitions (LOF _per_cell).
+    # through mapInPandas over cell-sorted partitions (stream_groups).
     assert "FlatMapGroupsInPandas" not in plan
     assert "MapInPandas" in plan
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan

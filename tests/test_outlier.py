@@ -167,10 +167,9 @@ def test_forced_shuffle_join_config(spark, result):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     # r14 (ADVICE r13, medium): a tiny Arrow batch cap makes the lrd
     # pass's cell groups straddle batch boundaries, so this exercises
-    # the multi-batch _per_cell path where a fragmented (id-sorted)
-    # input would actually fail — at sf0.001 the whole partition
-    # otherwise fits one batch and intra-batch groupby hides the
-    # fragmentation the shuffle join causes.
+    # stream_groups' multi-batch tail carry — at sf0.001 the whole
+    # partition otherwise fits one batch. A fragmented (id-sorted)
+    # input would fail stream_groups' contiguity check.
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
     try:
         df = O.local_outlier_factor(spark, SF_DIR)
@@ -205,8 +204,8 @@ def test_small_neighborhood_raises_loudly(spark, monkeypatch):
 
 def test_lof_single_cell_exchange(spark):
     """r11 plan shape: the exploded 9x frame is hash-partitioned by cell
-    ONCE (inside the checkpoint) and both applyInPandas groupBys reuse
-    it — the live plan carries exactly one hash exchange (the final
+    ONCE (inside the checkpoint) and both stream_groups matrix passes
+    reuse it — the live plan carries exactly one hash exchange (the final
     pair-sum aggregation) plus the gated broadcast, never a re-shuffle
     of the 9x frame per pass."""
     import re

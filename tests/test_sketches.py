@@ -316,16 +316,25 @@ def test_ivf_streams_lists_without_grppandas(spark):
     """r14 (VERDICT r13 item 4): the in-list scorer streams cell-sorted
     partitions through mapInPandas — the per-group Arrow protocol
     (FlatMapGroupsInPandas) must be gone from the plan, and the scored
-    pair set must be identical to a reference per-group recomputation."""
+    pair set must be identical to a reference per-group recomputation.
+    50-row Arrow batches make the list groups straddle batch boundaries,
+    so stream_groups' tail carry is exercised."""
     import numpy as np
 
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.operators import similarity as SIM
 
-    df = SIM.ivf_ann(spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "50")
+        df = SIM.ivf_ann(spark, SF_SMOKE)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        got = df.toPandas()
+    finally:
+        spark.conf.set(key, old)
     assert "FlatMapGroupsInPandas" not in plan
     assert "MapInPandas" in plan
-    got = df.toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+    got = got.sort_values(["query_id", "rank"]).reset_index(drop=True)
     # reference: exact top-5 within each vector's assigned list, computed
     # from the same deterministic assignment law (argmax of fold-ordered
     # cosines against the 16 lowest-id centroids)

@@ -11,7 +11,9 @@ Reference semantics reproduced:
   - consumers read the stable view vw_{table}, atomically repointed with
     CREATE OR REPLACE VIEW (ecs_loader/load_to_postgres.py:234-247);
   - retention drops the oldest snapshot only when ≥2 exist
-    (ecs_loader/load_to_postgres.py:269-291).
+    (ecs_loader/load_to_postgres.py:269-291) — but never the one the view
+    points at, so a backfill (a `date` older than the current snapshot)
+    does not drop the table it just published.
 """
 
 from __future__ import annotations
@@ -121,16 +123,28 @@ def list_snapshots(spark: SparkSession, table: str) -> list[str]:
             out.append(t.name)
     return sorted(out)
 
+def _view_target(spark: SparkSession, table: str) -> str | None:
+    """The snapshot vw_{table} reads (publish writes it as
+    `SELECT * FROM <snapshot>`), or None when there is no view."""
+    view = f"vw_{table}"
+    if not spark.catalog.tableExists(view):
+        return None
+    for r in spark.sql(f"DESCRIBE TABLE EXTENDED {view}").collect():
+        if r.col_name == "View Text":
+            return r.data_type.split()[-1].lower()
+    return None
+
 def drop_old_snapshots(spark: SparkSession, table: str, keep: int = 1) -> list[str]:
     """Drop oldest snapshots while more than `keep` exist — the reference
     drops the min-dated table only when ≥2 exist
-    (ecs_loader/load_to_postgres.py:285-288)."""
+    (ecs_loader/load_to_postgres.py:285-288). The snapshot the view points
+    at is never dropped: after a backfill it is the min-dated one."""
     snaps = list_snapshots(spark, table)
-    dropped = []
-    while len(snaps) > keep:
-        oldest = snaps.pop(0)
-        spark.sql(f"DROP TABLE IF EXISTS {oldest}")
-        dropped.append(oldest)
+    live = _view_target(spark, table)
+    old = [t for t in snaps if t != live]
+    dropped = old[:max(0, len(snaps) - keep)]
+    for t in dropped:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
     return dropped
 
 def publish_snapshot_jdbc(
@@ -160,7 +174,8 @@ def publish_snapshot_jdbc(
          consumers-never-see-a-gap guarantee as Postgres's
          CREATE OR REPLACE VIEW (:234-247);
       4. retention: parse {table}_{YYYY_MM_DD} suffixes from database
-         metadata, drop oldest while more than `keep` exist (:269-291).
+         metadata, drop oldest while more than `keep` exist (:269-291),
+         never the snapshot just swapped in (a backfill's is the oldest).
 
     Tested end-to-end against embedded Derby (tests/test_jdbc.py); the
     same calls run against Postgres unchanged — metadata lookups fold the
@@ -220,7 +235,8 @@ def publish_snapshot_jdbc(
             t = rs.getString("TABLE_NAME")
             if t.lower().startswith(table.lower() + "_") and _DATE_RE.search(t.lower()):
                 snaps.append(t)
-        for oldest in sorted(snaps)[:max(0, len(snaps) - keep)]:
+        old = sorted(t for t in snaps if t.lower() != name.lower())
+        for oldest in old[:max(0, len(snaps) - keep)]:
             st.execute(f"DROP TABLE {oldest}")
     finally:
         conn.close()
@@ -230,11 +246,23 @@ def run_pipeline(spark: SparkSession, sf_dir: str, date: str,
                  csv_path: str | None = None) -> str:
     """End-to-end refresh = the reference's two entry points fused
     (SURVEY.md §3): flagship transform → CSV interchange sink (optional) →
-    snapshot publish with grain check, view swap, retention."""
+    snapshot publish with grain check, view swap, retention.
+
+    The result is materialized once, before the first action: the CSV
+    sink, the grain check and the table write each run an action, and on
+    the lazy DataFrame each would re-run the whole plan (scan, broadcast
+    join, dissolve, shuffle) to rebuild the same ~300 grain rows. The
+    reference does the same — the Spark job computes once and the loader
+    publishes its CSV handoff. `localCheckpoint`, not `persist()`: with
+    `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` off, a
+    cached plan keeps every shuffle partition in its final Python stage,
+    which forks an extra Python worker and raises worker RSS; the
+    checkpoint runs as an ordinary AQE query, as the operators' own
+    intermediate results do."""
     from ..sources.io import write_csv_sink
     from .pipeline import crop_analytics
 
-    result = crop_analytics(spark, sf_dir)
+    result = crop_analytics(spark, sf_dir).localCheckpoint(eager=True)
     if csv_path:
         write_csv_sink(result, csv_path)
     return publish_snapshot(

@@ -2151,7 +2151,9 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed on the grain and the join is shuffle-free (write_bucketed)."""
     from .catalog import publish_snapshot
 
-    base = crop_analytics(spark, sf_dir)
+    # materialized once: the grain checks and writes of v1 and of the
+    # derived v2 would otherwise each re-run the flagship plan (4x)
+    base = crop_analytics(spark, sf_dir).localCheckpoint(eager=True)
     v2 = base.selectExpr(
         "region_id", "season_id", "land_type_id",
         "CASE WHEN season_id = 2 THEN area + 1 ELSE area END AS area",

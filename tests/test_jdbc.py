@@ -138,6 +138,29 @@ def test_jdbc_blue_green_publish_full_sequence(spark):
     assert spark.read.jdbc(url, "vw_crop").count() == 2
 
 
+def test_jdbc_backfill_publish_keeps_live_snapshot(spark):
+    """A backfill (a date older than the current snapshot) swaps the view
+    to its own table; retention must drop the newer table, not the one the
+    view now reads."""
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.plans.catalog import (
+        publish_snapshot_jdbc,
+    )
+
+    url = "jdbc:derby:memory:backfill;create=true"
+    df = spark.createDataFrame(
+        [(0, 1, 1, 10.0), (1, 2, 1, 30.0)],
+        "region_id long, season_id long, land_type_id long, area double",
+    )
+    publish_snapshot_jdbc(spark, df, url, "crop_bf", "2026-05-01")
+    publish_snapshot_jdbc(spark, df, url, "crop_bf", "2026-04-01")
+    assert spark.read.jdbc(url, "vw_crop_bf").count() == 2
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    rs = conn.getMetaData().getTables(None, None, "CROP%", None)
+    tables = [rs.getString("TABLE_NAME") for _ in iter(rs.next, False)]
+    conn.close()
+    assert tables == ["CROP_BF_2026_04_01"], tables
+
+
 def test_jdbc_publish_rejects_unsafe_identifiers(spark):
     """Table/grain/measure/date are interpolated into DDL unquoted — a
     non-identifier must be rejected before any SQL runs."""

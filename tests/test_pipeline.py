@@ -30,14 +30,36 @@ def test_fixture_parity_spark_vs_duckdb(spark, duck):
     assert sr[["id", "gx1", "gy1", "gx2", "gy2"]].values.tolist() == \
         orc[["id", "gx1", "gy1", "gx2", "gy2"]].values.tolist()
 
-def test_crop_analytics_matches_oracle(spark, duck):
-    s = pipeline.crop_analytics(spark, SF_SMOKE).toPandas()
-    o = duck.execute(pipeline.CROP_ANALYTICS_ORACLE).df()
+def _drop_snapshots(spark, table):
+    for t in catalog.list_snapshots(spark, table):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    spark.sql(f"DROP VIEW IF EXISTS vw_{table}")
+
+def _read_csv_sink(path):
+    import glob
+    import os
+
+    import pandas as pd
+
+    parts = [p for p in sorted(glob.glob(os.path.join(path, "part-*")))
+             if os.path.getsize(p)]
+    return pd.concat(
+        [pd.read_csv(p, header=None, float_precision="round_trip",
+                     names=["region_id", "season_id", "land_type_id", "area"])
+         for p in parts],
+        ignore_index=True)
+
+def _assert_equals_crop_oracle(pdf, duck):
     key = ["region_id", "season_id", "land_type_id"]
-    s = s.sort_values(key).reset_index(drop=True)
+    o = duck.execute(pipeline.CROP_ANALYTICS_ORACLE).df()
+    s = pdf.sort_values(key).reset_index(drop=True)
     o = o.sort_values(key).reset_index(drop=True)
     assert len(s) == len(o)
+    assert (s[key].values == o[key].values).all()
     assert (s["area"] == o["area"]).all()
+
+def test_crop_analytics_matches_oracle(spark, duck):
+    _assert_equals_crop_oracle(pipeline.crop_analytics(spark, SF_SMOKE).toPandas(), duck)
 
 def test_full_chain_positive_areas(spark):
     rows = pipeline._crop_analytics_full_area(spark, SF_SMOKE).collect()
@@ -145,6 +167,70 @@ def test_grain_violation_detected(spark):
             spark, dup, "crop_dup", "2026-01-01",
             grain=["region_id", "season_id", "land_type_id"],
         )
+
+def test_backfill_publish_keeps_live_snapshot(spark):
+    """Publishing a date older than the current snapshot repoints the view
+    at the backfill; retention then drops the newer table, never the one
+    the view reads."""
+    df = spark.createDataFrame(
+        [(1, 1, 1, 2.0), (1, 1, 2, 3.0)],
+        "region_id int, season_id int, land_type_id int, area double",
+    )
+    try:
+        catalog.publish_snapshot(spark, df, "crop_bf", "2026-05-01")
+        name = catalog.publish_snapshot(spark, df, "crop_bf", "2026-04-01")
+        assert catalog.list_snapshots(spark, "crop_bf") == [name]
+        assert spark.table("vw_crop_bf").count() == 2
+    finally:
+        _drop_snapshots(spark, "crop_bf")
+
+def test_refresh_cli_end_to_end(spark, duck, tmp_path):
+    """The refresh CLI as the reference runs it: extract, dissolve, CSV
+    sink, publish. The view and the CSV both equal the flagship oracle; a
+    re-run of a date overwrites it; the next date retires the previous."""
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.__main__ import main
+
+    csv = str(tmp_path / "csv")
+    try:
+        assert main([SF_SMOKE, "--date", "2031-03-01", "--csv", csv]) == 0
+        _assert_equals_crop_oracle(spark.table("vw_crop_analytics").toPandas(), duck)
+        _assert_equals_crop_oracle(_read_csv_sink(csv), duck)
+        assert main([SF_SMOKE, "--date", "2031-03-01", "--csv", csv]) == 0
+        assert catalog.list_snapshots(spark, "crop_analytics") == \
+            ["crop_analytics_2031_03_01"]
+        assert main([SF_SMOKE, "--date", "2031-03-02", "--csv", csv]) == 0
+        assert catalog.list_snapshots(spark, "crop_analytics") == \
+            ["crop_analytics_2031_03_02"]
+        _assert_equals_crop_oracle(spark.table("vw_crop_analytics").toPandas(), duck)
+    finally:
+        spark.sparkContext.setLogLevel("ERROR")  # main sets WARN
+        _drop_snapshots(spark, "crop_analytics")
+
+def test_refresh_evaluates_flagship_once(spark, monkeypatch, tmp_path):
+    """The CSV sink, the grain check and the table write all read one
+    materialized result: every result row passes through the flagship
+    plan exactly once per refresh, not once per action."""
+    rows = spark.sparkContext.accumulator(0)
+    flagship = pipeline.crop_analytics
+
+    def tap(batches):
+        for b in batches:
+            rows.add(len(b))
+            yield b
+
+    def counted(spark_, sf_dir):
+        df = flagship(spark_, sf_dir)
+        return df.mapInPandas(tap, df.schema)
+
+    monkeypatch.setattr(pipeline, "crop_analytics", counted)
+    try:
+        name = catalog.run_pipeline(spark, SF_SMOKE, "2031-04-01",
+                                    csv_path=str(tmp_path / "csv"))
+        n = spark.table(name).count()
+        assert n > 0
+        assert rows.value == n
+    finally:
+        _drop_snapshots(spark, "crop_analytics")
 
 def test_csv_sink_round_trip(spark, tmp_path):
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.sources.io import (
